@@ -21,6 +21,21 @@ def backdate_tree(path: str, ts: float = 0.0) -> None:
 
 
 @pytest.fixture(scope="session")
+def reference_file():
+    """Resolve a file of the reference checkout's committed real data,
+    skipping the requesting test when the file is absent. Those files
+    are not vendored into this repo, so the real-data parity tests run
+    only where the reference checkout is present."""
+
+    def resolve(path: str) -> str:
+        if not os.path.isfile(path):
+            pytest.skip(f"reference file not present: {path}")
+        return path
+
+    return resolve
+
+
+@pytest.fixture(scope="session")
 def spark():
     from utility_service_areas_spark.session import build_session
 

@@ -52,8 +52,8 @@ EXPORTED_FIELDS = {
 }
 
 
-def test_real_certificates_csv_parses_and_cleans_exact(spark):
-    raw = read_certificates_csv(spark, REF_CSV)
+def test_real_certificates_csv_parses_and_cleans_exact(spark, reference_file):
+    raw = read_certificates_csv(spark, reference_file(REF_CSV))
     assert raw.columns == [f.name for f in CERTIFICATES_CSV_SCHEMA.fields]
     assert raw.count() == 170  # header + 170 data rows
 
@@ -94,8 +94,8 @@ def test_real_certificates_csv_parses_and_cleans_exact(spark):
     assert utypes == {"Electric"}
 
 
-def test_real_service_areas_geojson_schema_and_counts(spark):
-    df = read_geojson(spark, REF_GEOJSON)
+def test_real_service_areas_geojson_schema_and_counts(spark, reference_file):
+    df = read_geojson(spark, reference_file(REF_GEOJSON))
     rows = df.collect()
     feats = {}
     for r in rows:
@@ -137,8 +137,8 @@ def test_real_service_areas_geojson_schema_and_counts(spark):
     assert 50.0 <= stats.lat_min <= stats.lat_max <= 72.5
 
 
-def test_real_raw_geojson_carries_certificate_list_schema(spark):
-    df = read_geojson(spark, REF_GEOJSON_RAW)
+def test_real_raw_geojson_carries_certificate_list_schema(spark, reference_file):
+    df = read_geojson(spark, reference_file(REF_GEOJSON_RAW))
     rows = df.select("feature_idx", "properties_json").distinct().collect()
     assert len(rows) == 130  # pre-cleanup layer: one row per raw feature
     csv_cols = set(f.name for f in CERTIFICATES_CSV_SCHEMA.fields)
@@ -146,12 +146,14 @@ def test_real_raw_geojson_carries_certificate_list_schema(spark):
         assert set(json.loads(r.properties_json)) == csv_cols
 
 
-def test_exported_certificates_exist_in_real_csv(spark):
+def test_exported_certificates_exist_in_real_csv(spark, reference_file):
     """The inner join the reference performs (metadata ⋈ geometry,
     R/functions.R:186-189,480-486): every certificate in the final
     GeoJSON must exist in the certificates CSV, and must be Active
     Electric there (the certificates_csv_df_cleaned filter)."""
-    cleaned = clean_certificates(read_certificates_csv(spark, REF_CSV))
+    cleaned = clean_certificates(
+        read_certificates_csv(spark, reference_file(REF_CSV))
+    )
     # float keys, NOT int: the real file carries both CPCN 18 (Active)
     # and CPCN 18.1 (Inactive) — int() would collapse them and
     # misattribute 18.1's status to 18 (caught writing this test)
@@ -159,7 +161,7 @@ def test_exported_certificates_exist_in_real_csv(spark):
         float(r["certificate_number"]): r["certificate_status"]
         for r in cleaned.collect()
     }
-    gj = read_geojson(spark, REF_GEOJSON)
+    gj = read_geojson(spark, reference_file(REF_GEOJSON))
     certs = {
         json.loads(r.properties_json)["certificate_number"]
         for r in gj.select("feature_idx", "properties_json")

@@ -68,15 +68,19 @@ NON_DERIVABLE_FIELDS = {
 }
 
 
-def _export_features():
-    fc = json.load(open(REF_OUT))
+@pytest.fixture(scope="module")
+def export_features(reference_file):
+    with open(reference_file(REF_OUT)) as f:
+        fc = json.load(f)
     return {
         int(f["properties"]["certificate_number"]): f for f in fc["features"]
     }
 
 
-def _raw_features():
-    fc = json.load(open(REF_RAW))
+@pytest.fixture(scope="module")
+def raw_features(reference_file):
+    with open(reference_file(REF_RAW)) as f:
+        fc = json.load(f)
     return {
         float(f["properties"]["certificate_number"]): f
         for f in fc["features"]
@@ -84,7 +88,7 @@ def _raw_features():
 
 
 @pytest.fixture(scope="module")
-def replay(spark, tmp_path_factory):
+def replay(spark, tmp_path_factory, reference_file):
     from utility_service_areas_spark.plans.targets import (
         run_pipeline,
         service_areas_replay_stages,
@@ -92,7 +96,11 @@ def replay(spark, tmp_path_factory):
 
     store = str(tmp_path_factory.mktemp("replay_store"))
     stages = service_areas_replay_stages(
-        REF_RAW, REF_CSV, OPERATOR_IDS, INACTIVE_IDS, MERGE_PATCHES
+        reference_file(REF_RAW),
+        reference_file(REF_CSV),
+        OPERATOR_IDS,
+        INACTIVE_IDS,
+        MERGE_PATCHES,
     )
     report = run_pipeline(spark, stages, store)
     assert set(report.values()) == {"built"}
@@ -103,18 +111,18 @@ def replay(spark, tmp_path_factory):
     return {int(r.certificate_number): r for r in rows}
 
 
-def test_replay_feature_set_is_export_minus_plss_built(replay):
-    exported = set(_export_features())
+def test_replay_feature_set_is_export_minus_plss_built(replay, export_features):
+    exported = set(export_features)
     derived = set(replay)
     assert PLSS_BUILT <= exported  # the 4 network-built features exist
     assert derived == exported - PLSS_BUILT
     assert len(derived) == 104 and len(exported) == 108
 
 
-def test_replay_geometry_byte_exact_for_unpatched_features(replay):
+def test_replay_geometry_byte_exact_for_unpatched_features(replay, export_features):
     """98 of 108 exported features must reproduce coordinate-for-
     coordinate from the committed raw layer."""
-    out = _export_features()
+    out = export_features
     byte_certs = set(replay) - PLSS_PATCHED - MERGE_TARGETS
     assert len(byte_certs) == 98
     mismatch = []
@@ -129,11 +137,11 @@ def test_replay_geometry_byte_exact_for_unpatched_features(replay):
     assert mismatch == []
 
 
-def test_replay_plss_patched_geometries_differ_as_documented(replay):
+def test_replay_plss_patched_geometries_differ_as_documented(replay, export_features):
     """The reference replaced these four geometries from live PLSS
     query URLs — if the raw layer ever starts matching the export
     here, the patch became derivable and this map must be updated."""
-    out = _export_features()
+    out = export_features
     for c in sorted(PLSS_PATCHED):
         ours = [
             [[list(pt) for pt in ring] for ring in poly]
@@ -144,7 +152,7 @@ def test_replay_plss_patched_geometries_differ_as_documented(replay):
         ), c
 
 
-def test_replay_merge_targets_area_and_polygon_accounting(replay):
+def test_replay_merge_targets_area_and_polygon_accounting(replay, export_features):
     """The s2 union renumbers coordinates, so the merge targets pin
     on planar area (computed by OUR shoelace on BOTH sides) and on
     polygon accounting: cert 169's absorption is disjoint (44 + 6
@@ -153,7 +161,7 @@ def test_replay_merge_targets_area_and_polygon_accounting(replay):
     area within 3e-6 relative of the disjoint concat)."""
     from utility_service_areas_spark.functions.geometry import polygon_area
 
-    out = _export_features()
+    out = export_features
 
     def area(coords):
         return sum(polygon_area(p) for p in coords)
@@ -176,8 +184,8 @@ def test_replay_merge_targets_area_and_polygon_accounting(replay):
     assert abs(a_o - a_t) / a_t < 3e-6
 
 
-def test_replay_properties_match_export(replay):
-    out = _export_features()
+def test_replay_properties_match_export(replay, export_features):
+    out = export_features
     for c, r in replay.items():
         p = out[c]["properties"]
         # cert 45's entity is the CSV's single empty cell:
@@ -189,25 +197,24 @@ def test_replay_properties_match_export(replay):
         assert isinstance(c, int)  # export writes integer cert numbers
 
 
-def test_chronology_fields_documented_non_derivable(replay):
+def test_chronology_fields_documented_non_derivable(replay, export_features):
     """The export carries 7 chronology-derived fields; the committed
     inputs cannot produce them, and the replay honestly omits them
     instead of fabricating values."""
-    out = _export_features()
+    out = export_features
     sample = next(iter(out.values()))["properties"]
     assert NON_DERIVABLE_FIELDS <= set(sample)
     row_fields = set(next(iter(replay.values())).asDict())
     assert row_fields & NON_DERIVABLE_FIELDS == set()
 
 
-def test_replay_filters_account_for_every_raw_drop():
+def test_replay_filters_account_for_every_raw_drop(export_features, raw_features):
     """Every raw feature absent from the export is explained by
     exactly the replayed rules: operator pseudo-areas, curated
     inactive ids, Inactive status, or acquisition absorption."""
-    raw = _raw_features()
-    exported = {float(c) for c in _export_features()}
+    exported = {float(c) for c in export_features}
     absorbed = {float(c2) for _c1, c2 in MERGE_PATCHES}
-    for c, f in raw.items():
+    for c, f in raw_features.items():
         if c in exported:
             continue
         props = f["properties"]

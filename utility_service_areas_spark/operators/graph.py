@@ -13,8 +13,6 @@ standard Spark iterative-algorithm discipline.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,21 +26,13 @@ from utility_service_areas_spark.operators.spread import cpu_spread_width
 # 5-round convergence is ~10 jobs for a graph union-find resolves in
 # microseconds). The labels are identical BY CONSTRUCTION: component =
 # min node id, the same fixpoint the propagation loop reaches
-# (equivalence pinned in tests). The cap is edge rows, parameterized
-# for deployments; above it — every at-scale corpus — the loop runs
-# exactly as before, having spent one O(cap)-row limit job to decide
+# (equivalence pinned in tests). The cap is edge rows; above it —
+# every at-scale corpus — the loop runs exactly as before, having
+# spent one O(cap)-row limit job to decide
 # (the partitions it materialized stay cached for round 1). Driver
 # memory is bounded: cap rows × 2 ids. Same sanctioned class of
 # driver-side fold as Lloyd's k-centroid collect (kmeans.py).
-_LOCAL_CC_ENV = "SPARK_GRAFT_LOCAL_CC_EDGES"
-_LOCAL_CC_DEFAULT = 100_000
-
-
-def _local_cc_cap() -> int:
-    try:
-        return int(os.environ.get(_LOCAL_CC_ENV, _LOCAL_CC_DEFAULT))
-    except ValueError:
-        return _LOCAL_CC_DEFAULT
+_LOCAL_CC_EDGES = 100_000
 
 
 def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
@@ -50,15 +40,12 @@ def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
     the graph exceeds the cap (or node ids aren't plainly orderable
     across engines — only numeric ids take the fast path; Python and
     SQL string collation subtleties stay out of scope)."""
-    cap = _local_cc_cap()
-    if cap <= 0:
-        return None
     u_type, v_type = (f.dataType.typeName() for f in edges.schema.fields[:2])
     numeric = {"byte", "short", "integer", "long"}
     if u_type not in numeric or u_type != v_type:
         return None
-    rows = edges.limit(cap + 1).collect()
-    if len(rows) > cap:
+    rows = edges.limit(_LOCAL_CC_EDGES + 1).collect()
+    if len(rows) > _LOCAL_CC_EDGES:
         return None
     parent: dict = {}
 

@@ -126,6 +126,70 @@ def certificate_metadata(
     )
 
 
+def _active_certificates(
+    certificates: DataFrame, operator_ids: list[int], inactive_ids: list[int]
+) -> DataFrame:
+    """filter_certificates_csv semantics (R/functions.R:194-228): drop
+    operators, drop curated inactive ids, keep Active."""
+    return filter_active_utilities(
+        tag_entities(certificates, "certificate_number", operator_ids),
+        "certificate_number",
+        inactive_ids,
+        F.col("certificate_status") == "Active",
+    )
+
+
+def _merge_acquisitions(
+    combined: DataFrame, merge_patches: list[tuple[int, int]]
+) -> DataFrame:
+    """Acquisition merges (get_merge_geom, R/functions.R:421-444):
+    cert2's polygons are appended into cert1's MultiPolygon (disjoint
+    service areas: union == combine). Absorbed certs never survive as
+    their own rows, even where the certificate filter would keep them
+    (r15 review #5; on the real data every cert2 is Inactive anyway)."""
+    if not merge_patches:
+        return combined
+    patch_df = local_df(combined.sparkSession, merge_patches, ["cert1", "cert2"])
+    # collect_list order is task-completion order — sort by cert2
+    # before flattening so a cert absorbing several others gets a
+    # run-stable polygon order (r15 review #4)
+    acquired = (
+        combined.join(
+            F.broadcast(patch_df),
+            combined.certificate_number == patch_df.cert2,
+        )
+        .groupBy(F.col("cert1").alias("certificate_number"))
+        .agg(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                F.col("cert2").alias("c2"),
+                                F.col("geometry").alias("g"),
+                            )
+                        )
+                    ),
+                    lambda s: s["g"],
+                )
+            ).alias("acq_geometry")
+        )
+    )
+    merged = (
+        combined.join(F.broadcast(acquired), "certificate_number", "left")
+        .withColumn(
+            "geometry",
+            F.when(
+                F.col("acq_geometry").isNotNull(),
+                F.concat(F.col("geometry"), F.col("acq_geometry")),
+            ).otherwise(F.col("geometry")),
+        )
+        .drop("acq_geometry")
+    )
+    absorbed = [c2 for _, c2 in merge_patches]
+    return merged.filter(~F.col("certificate_number").isin(absorbed))
+
+
 def build_service_areas(
     spark: SparkSession,
     kml_glob: str,
@@ -148,68 +212,22 @@ def build_service_areas(
     over each merged certificate's polygons, so overlapping
     acquisitions don't double-count area.
     """
-    certs = filter_active_utilities(
-        tag_entities(certificates, "certificate_number", operator_ids),
-        "certificate_number",
-        inactive_ids,
-        F.col("certificate_status") == "Active",
+    certs = _active_certificates(certificates, operator_ids, inactive_ids)
+    combined = _merge_acquisitions(
+        combine_by_certificate(_kml_with_cert(read_kml(spark, kml_glob))),
+        merge_patches,
     )
-    combined = combine_by_certificate(_kml_with_cert(read_kml(spark, kml_glob)))
-
-    # Acquisition merges: cert2's polygons are appended into cert1's
-    # MultiPolygon (disjoint service areas: union == combine,
-    # R/functions.R:421-444 get_merge_geom).
-    if merge_patches:
-        patch_df = local_df(spark, merge_patches, ["cert1", "cert2"])
-        # collect_list order is task-completion order — sort by cert2
-        # before flattening so a cert absorbing several others gets a
-        # run-stable polygon order (r15 review #4)
-        acquired = (
-            combined.join(
-                F.broadcast(patch_df),
-                combined.certificate_number == patch_df.cert2,
-            )
-            .groupBy(F.col("cert1").alias("certificate_number"))
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("cert2").alias("c2"),
-                                    F.col("geometry").alias("g"),
-                                )
-                            )
-                        ),
-                        lambda s: s["g"],
-                    )
-                ).alias("acq_geometry")
-            )
+    if merge_patches and not assume_disjoint:
+        # True dissolve of the merged MultiPolygon — only the
+        # certificates that actually absorbed another one pay the
+        # overlay cost; untouched rows keep their geometry as-is.
+        combined = combined.withColumn(
+            "geometry",
+            F.when(
+                F.col("certificate_number").isin([c1 for c1, _ in merge_patches]),
+                st_union_multi(F.col("geometry")),
+            ).otherwise(F.col("geometry")),
         )
-        combined = (
-            combined.join(F.broadcast(acquired), "certificate_number", "left")
-            .withColumn(
-                "geometry",
-                F.when(
-                    F.col("acq_geometry").isNotNull(),
-                    F.concat(F.col("geometry"), F.col("acq_geometry")),
-                ).otherwise(F.col("geometry")),
-            )
-            .drop("acq_geometry")
-        )
-        absorbed = [c2 for _, c2 in merge_patches]
-        combined = combined.filter(~F.col("certificate_number").isin(absorbed))
-        if not assume_disjoint:
-            # True dissolve of the merged MultiPolygon — only the
-            # certificates that actually absorbed another one pay the
-            # overlay cost; untouched rows keep their geometry as-is.
-            combined = combined.withColumn(
-                "geometry",
-                F.when(
-                    F.col("certificate_number").isin([c1 for c1, _ in merge_patches]),
-                    st_union_multi(F.col("geometry")),
-                ).otherwise(F.col("geometry")),
-            )
 
     meta = certificate_metadata(certs, enrich_chronology(chronology))
     joined = combined.join(F.broadcast(meta), "certificate_number", "inner")
@@ -305,59 +323,8 @@ def replay_service_areas_from_raw(
     certificate_last_update_*, geometry_last_update,
     geometry_is_current, sync status — the chronology scrape is not
     committed)."""
-    certs = filter_active_utilities(
-        tag_entities(certificates, "certificate_number", operator_ids),
-        "certificate_number",
-        inactive_ids,
-        F.col("certificate_status") == "Active",
-    )
-    combined = raw_layer
-    if merge_patches:
-        spark = raw_layer.sparkSession
-        patch_df = local_df(spark, merge_patches, ["cert1", "cert2"])
-        acquired = (
-            combined.join(
-                F.broadcast(patch_df),
-                combined.certificate_number == patch_df.cert2,
-            )
-            .groupBy(F.col("cert1").alias("certificate_number"))
-            .agg(
-                # run-stable absorb order (sort by cert2) — the same
-                # determinism fix as build_service_areas (r15 review #4)
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("cert2").alias("c2"),
-                                    F.col("geometry").alias("g"),
-                                )
-                            )
-                        ),
-                        lambda s: s["g"],
-                    )
-                ).alias("acq_geometry")
-            )
-        )
-        combined = (
-            combined.join(F.broadcast(acquired), "certificate_number", "left")
-            .withColumn(
-                "geometry",
-                F.when(
-                    F.col("acq_geometry").isNotNull(),
-                    F.concat(F.col("geometry"), F.col("acq_geometry")),
-                ).otherwise(F.col("geometry")),
-            )
-            .drop("acq_geometry")
-        )
-        # absorbed certs must never survive as their own rows even if
-        # the CSV filter would keep them (build_service_areas applies
-        # the same drop — r15 review #5; on the real data every cert2
-        # is Inactive anyway, so this is robustness, not a result fix)
-        absorbed = [c2 for _, c2 in merge_patches]
-        combined = combined.filter(
-            ~F.col("certificate_number").isin(absorbed)
-        )
+    certs = _active_certificates(certificates, operator_ids, inactive_ids)
+    combined = _merge_acquisitions(raw_layer, merge_patches)
     joined = combined.join(F.broadcast(certs), "certificate_number", "inner")
     return joined.select(
         F.col("certificate_number").cast("int").alias("certificate_number"),

@@ -259,6 +259,23 @@ CHRONOLOGY_CSV_SCHEMA = (
 )
 
 
+def _patch_params(
+    operator_ids: list[int],
+    inactive_ids: list[int],
+    merge_patches: list[tuple[int, int]],
+) -> str:
+    """The pipeline definition's IDs and patches as a stage's params:
+    order-insensitive, so reordering a list does not rebuild."""
+    return json.dumps(
+        {
+            "operator_ids": sorted(operator_ids),
+            "inactive_ids": sorted(inactive_ids),
+            "merge_patches": sorted(merge_patches),
+        },
+        sort_keys=True,
+    )
+
+
 def service_areas_stages(
     kml_dir: str,
     certificates_csv: str,
@@ -317,14 +334,6 @@ def service_areas_stages(
             merge_patches,
         )
 
-    params = json.dumps(
-        {
-            "operator_ids": sorted(operator_ids),
-            "inactive_ids": sorted(inactive_ids),
-            "merge_patches": sorted(merge_patches),
-        },
-        sort_keys=True,
-    )
     return [
         Stage("certificates", certs_build, inputs=(certificates_csv,)),
         Stage("chronology", chron_build, inputs=(chronology_csv,)),
@@ -339,7 +348,7 @@ def service_areas_stages(
             cleaned_build,
             inputs=(kml_dir,),
             deps=("certificates", "chronology"),
-            params=params,
+            params=_patch_params(operator_ids, inactive_ids, merge_patches),
         ),
     ]
 
@@ -384,14 +393,6 @@ def service_areas_replay_stages(
             merge_patches,
         )
 
-    params = json.dumps(
-        {
-            "operator_ids": sorted(operator_ids),
-            "inactive_ids": sorted(inactive_ids),
-            "merge_patches": sorted(merge_patches),
-        },
-        sort_keys=True,
-    )
     return [
         Stage("certificates", certs_build, inputs=(certificates_csv,)),
         Stage("raw_layer", raw_build, inputs=(raw_geojson,)),
@@ -399,6 +400,6 @@ def service_areas_replay_stages(
             "service_areas_replay",
             replay_build,
             deps=("certificates", "raw_layer"),
-            params=params,
+            params=_patch_params(operator_ids, inactive_ids, merge_patches),
         ),
     ]

@@ -11,7 +11,6 @@ Only stdlib xml.etree is used (no lxml in the environment).
 
 from __future__ import annotations
 
-import os
 import re
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
@@ -146,7 +145,3 @@ def read_kml(spark: SparkSession, path_glob: str) -> DataFrame:
             )
 
     return binary.select("path", "content").mapInPandas(parse, KML_SCHEMA)
-
-
-def local_kml_glob(directory: str) -> str:
-    return os.path.join(directory, "*.kml")
