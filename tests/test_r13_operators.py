@@ -299,16 +299,12 @@ def test_r13_text_ops_plan_shape(spark):
         assert "BatchEvalPython" not in plan, fn
 
 
-def test_twostar_cc_label_identical_to_minlabel(spark):
-    """The algorithm-equivalence pin: two-star CC and min-label
-    propagation produce IDENTICAL (node, comp) labels on every
-    adversarial topology — 20-deep chain (propagation's worst case),
-    clique (two-star's best case), star, two disjoint components,
-    and a lollipop (clique + tail)."""
-    from utility_service_areas_spark.operators.graph import (
-        connected_components,
-        connected_components_twostar,
-    )
+def test_cc_loop_label_identical_to_union_find(spark, monkeypatch):
+    """The distributed min-label loop and the driver union-find fast
+    path produce IDENTICAL (node, comp) labels on every adversarial
+    topology — 20-deep chain (propagation's worst case), clique, star,
+    two disjoint components, and a lollipop (clique + tail)."""
+    from utility_service_areas_spark.operators import graph
 
     graphs = {
         "chain": [(i, i + 1) for i in range(100, 120)],
@@ -318,36 +314,24 @@ def test_twostar_cc_label_identical_to_minlabel(spark):
         "lollipop": [(i, j) for i in range(400, 406) for j in range(400, 406) if i < j]
         + [(405, 406), (406, 407), (407, 408)],
     }
-    for name, edges in graphs.items():
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        want = {
-            (r.node, r.comp) for r in connected_components(pairs).collect()
-        }
-        got = {
-            (r.node, r.comp)
-            for r in connected_components_twostar(pairs).collect()
-        }
-        assert got == want, name
+    pairs = {
+        name: spark.createDataFrame(edges, "doc_a long, doc_b long")
+        for name, edges in graphs.items()
+    }
+    want = {
+        name: {(r.node, r.comp) for r in graph.connected_components(p).collect()}
+        for name, p in pairs.items()
+    }
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
+    for name, p in pairs.items():
+        got = {(r.node, r.comp) for r in graph.connected_components(p).collect()}
+        assert got == want[name], name
         # every component's label is its minimum member
         comp_members = {}
         for node, comp in got:
             comp_members.setdefault(comp, []).append(node)
         for comp, members in comp_members.items():
             assert comp == min(members + [comp]), name
-
-
-def test_twostar_cc_matches_on_substrate_pairs(spark):
-    """Same equivalence on the REAL LSH pair graph (the #50/#243
-    input) at the smoke SF."""
-    from tests.conftest import SMOKE_SF
-    from utility_service_areas_spark.plans.dedup_queries import (
-        dedup_cc_twostar,
-        dedup_clusters_q,
-    )
-
-    got = sorted(map(tuple, dedup_cc_twostar(spark, SMOKE_SF).collect()))
-    want = sorted(map(tuple, dedup_clusters_q(spark, SMOKE_SF).collect()))
-    assert got == want
 
 
 def test_hits_planted_authority_ranking(spark):

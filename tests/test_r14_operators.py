@@ -219,35 +219,30 @@ def test_vacuum_spares_young_orphan_data_dirs(spark, tmp_path):
     assert _rows(spark, t) == {(2, "b")}
 
 
-def test_twostar_raises_on_exhaustion_instead_of_wrong_labels(
+def test_cc_loop_raises_on_exhaustion_instead_of_wrong_labels(
     spark, monkeypatch
 ):
-    """ADVICE r13 #4: exiting the large-star/small-star loop by
-    exhaustion (fingerprint still moving) must raise, not silently
-    return labels from a non-converged edge set; a sufficient
-    max_iter on the same graph converges and matches the propagation
-    operator. (r17: the driver union-find fast path solves a 40-edge
-    chain exactly without iterating — force the distributed loop via
-    the cap so this still pins the LOOP's exhaustion contract.)"""
+    """ADVICE r13 #4: exiting the min-label loop by exhaustion
+    (fingerprint still moving) must raise, not silently return labels
+    that are not yet a fixpoint; a sufficient max_iter on the same
+    graph converges and matches the union-find labels. The fast path
+    would solve a 40-edge chain without iterating, so the cap forces
+    the distributed loop."""
     from utility_service_areas_spark.operators import graph
-    from utility_service_areas_spark.operators.graph import (
-        connected_components,
-        connected_components_twostar,
-    )
 
-    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
+    want = {
+        (r.node, r.comp) for r in graph.connected_components(chain).collect()
+    }
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_twostar(chain, max_iter=1)
+        graph.connected_components(chain, max_iter=1)
 
     got = {
         (r.node, r.comp)
-        for r in connected_components_twostar(chain, max_iter=30).collect()
-    }
-    want = {
-        (r.node, r.comp) for r in connected_components(chain).collect()
+        for r in graph.connected_components(chain, max_iter=30).collect()
     }
     assert got == want
 

@@ -6,9 +6,9 @@
 2. compact_bm25_index raises its own lost-docs RuntimeError (not a
    TypeError) when the committed doclens are empty while the manifest
    claims docs.
-3. connected_components_twostar verifies the fixpoint directly on
-   max_iter exhaustion — a graph converging exactly AT max_iter
-   returns correct labels instead of raising.
+3. connected_components verifies the fixpoint directly on max_iter
+   exhaustion — a graph converging exactly AT max_iter returns
+   correct labels instead of raising.
 4. vacuum age gates (BM25 segments + versioned data dirs) key off the
    NEWEST file in the tree, so an in-flight write whose parent dir
    mtime went stale is spared.
@@ -109,36 +109,30 @@ def test_compact_empty_doclens_raises_lost_docs(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 3. two-star convergence exactly at max_iter
+# 3. CC loop convergence exactly at max_iter
 # ---------------------------------------------------------------------------
 
 
-def test_twostar_converging_exactly_at_max_iter_returns_labels(spark):
-    from utility_service_areas_spark.operators.graph import (
-        connected_components_twostar,
-    )
+def test_cc_loop_converging_exactly_at_max_iter_returns_labels(spark, monkeypatch):
+    from utility_service_areas_spark.operators import graph
 
-    # A single edge reaches the star fixpoint in round 1; fingerprint
-    # EQUALITY would only be observed in round 2, so max_iter=1 used
-    # to raise despite correct labels. The exhaustion path now runs
-    # one verify round and accepts the fixpoint.
+    # A single edge reaches the fixpoint in round 1; fingerprint
+    # EQUALITY would only be observed in round 2, so max_iter=1 would
+    # raise despite correct labels. The exhaustion path runs one verify
+    # round and accepts the fixpoint. The cap forces the distributed
+    # loop past the union-find fast path.
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     pairs = spark.createDataFrame([(2, 1)], "doc_a long, doc_b long")
     got = {
         (r.node, r.comp)
-        for r in connected_components_twostar(pairs, max_iter=1).collect()
+        for r in graph.connected_components(pairs, max_iter=1).collect()
     }
     assert got == {(1, 1), (2, 1)}
 
 
-def test_twostar_still_raises_when_genuinely_unconverged(spark, monkeypatch):
+def test_cc_loop_still_raises_when_genuinely_unconverged(spark, monkeypatch):
     from utility_service_areas_spark.operators import graph
-    from utility_service_areas_spark.operators.graph import (
-        connected_components_twostar,
-    )
 
-    # r17: the driver union-find fast path solves a 63-edge chain
-    # exactly without iterating — disable it so this still pins the
-    # LOOP's exhaustion contract.
     monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     # a 64-node path needs several rounds; max_iter=1 + one verify
     # round cannot reach the fixpoint -> loud failure, never wrong labels
@@ -146,7 +140,7 @@ def test_twostar_still_raises_when_genuinely_unconverged(spark, monkeypatch):
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_twostar(pairs, max_iter=1)
+        graph.connected_components(pairs, max_iter=1)
 
 
 # ---------------------------------------------------------------------------

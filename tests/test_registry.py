@@ -265,7 +265,6 @@ EXPECTED_KEYS = {
     "docs_gopher_quality_flags",
     "text_naive_bayes_source",
     "docs_dsir_importance",
-    "dedup_cc_twostar",
     "trade_graph_hits",
     "abtest_cuped_adjusted",
     "orders_theil_sen_trend",

@@ -2,13 +2,15 @@
 pairs — the endgame of every dedup family (pairs → clusters →
 canonical keeper per cluster).
 
-Implementation is large-star/small-star-style min-label propagation:
-each iteration joins the current labels across the edge list and
-takes the min neighbor label, until a fixpoint. Iterations are
-O(diameter); dedup graphs are near-clique clusters, so 2-4 rounds
-converge. Each round is one shuffle; intermediate frames are
-checkpointed (localCheckpoint) to cut the growing lineage — the
-standard Spark iterative-algorithm discipline.
+Connected components is min-label propagation with pointer jumping:
+each round joins the current labels across the edge list, takes the
+min neighbor label, then replaces every label by that label's own
+label, until a fixpoint. Pointer jumping makes the round count
+O(log diameter); dedup graphs are near-clique clusters, so 2-4 rounds
+converge. Each round is one shuffle; the edge list and every round's
+labels go through ``lineage_cut`` to cut the growing lineage — the
+standard Spark iterative-algorithm discipline. Graphs small enough
+for the driver skip the loop and are solved there with union-find.
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from utility_service_areas_spark.operators.dedup import lineage_cut
+from utility_service_areas_spark.operators.localrel import local_df
 from utility_service_areas_spark.operators.spread import cpu_spread_width
 
 # Small-graph fast path (r17): a pair graph that fits comfortably on
@@ -65,31 +69,11 @@ def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    labels = [(n, find(n)) for n in parent]
-    # Hand the labels back through pandas/Arrow: createDataFrame on a
-    # pandas frame plans as a LocalTableScan — no RDD, no job, and
-    # crucially no PythonRDD pickle stage (the list overload
-    # parallelizes to defaultParallelism pickle tasks, whose worker
-    # pool has its OWN PythonWorkerFactory key — measured in-bench as
-    # a fresh Python daemon + preload-import storm blocking all 32
-    # task slots for ~7 s the first time a query hit it).
-    import numpy as np
-    import pandas as pd
-
-    np_type = {
-        "byte": "int8",
-        "short": "int16",
-        "integer": "int32",
-        "long": "int64",
-    }[u_type]
-    pdf = pd.DataFrame(
-        {
-            "node": np.fromiter((n for n, _ in labels), dtype=np_type),
-            "comp": np.fromiter((c for _, c in labels), dtype=np_type),
-        }
-    )
-    return edges.sparkSession.createDataFrame(
-        pdf, f"node {u_type}, comp {u_type}"
+    # A LocalTableScan, not a PythonRDD pickle stage (see localrel).
+    return local_df(
+        edges.sparkSession,
+        [(n, find(n)) for n in parent],
+        f"node {u_type}, comp {u_type}",
     )
 
 
@@ -98,32 +82,21 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    symmetric: bool = False,
     pre_materialized: bool = False,
     width: int | None = None,
 ) -> DataFrame:
     """Edge list → (node, component) where component = min node id of
     the connected component. Nodes only in no pair are absent (callers
-    union isolated ids if needed). ``symmetric=True`` promises the
-    input already holds BOTH directions of every edge, deduplicated
-    (e.g. cluster_density's checkpointed `und`) — the union+distinct
-    shuffle is skipped. ``pre_materialized=True`` (implies symmetric)
-    additionally promises the caller already checkpointed the edge
-    frame — the repartition + second checkpoint pass is skipped too
-    (the lineage cut is the load-bearing part; the co-partitioning
-    was only a ~6%-warm win, see below).
+    union isolated ids if needed). ``pre_materialized=True`` promises
+    the input already holds BOTH directions of every edge,
+    deduplicated and checkpointed (e.g. cluster_density's `und`) — the
+    union+distinct shuffle, the repartition and the edge cut are
+    skipped.
+
+    Raises RuntimeError when the labels have not reached their fixpoint
+    after ``max_iter`` rounds plus one verify round.
     """
     edges = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if not (symmetric or pre_materialized):
-        edges = edges.union(
-            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
-        ).distinct()
-    # Reliable checkpointing when the caller configured a checkpoint
-    # dir (cluster posture: survives executor loss; localCheckpoint
-    # would recompute the whole lineage on loss). Local/test runs fall
-    # back to localCheckpoint — same lineage cut, no HDFS round-trip.
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
     # Materialize the edge list ONCE, PRE-PARTITIONED on the join key
     # (r8): checkpoint preserves outputPartitioning, so every round's
     # edge⋈label join shuffles only the node-sized label frame — the
@@ -143,6 +116,10 @@ def connected_components(
     # measured win of the pre-partitioned checkpoint was only ~6% warm;
     # the checkpoint's lineage cut is the load-bearing part).
     if not pre_materialized:
+        edges = edges.union(
+            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
+        ).distinct()
+        spark = pairs.sparkSession
         try:
             n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except (TypeError, ValueError):
@@ -159,17 +136,9 @@ def connected_components(
             # old n_shuffle.
             w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
             edges = edges.repartition(w, "v")
-        # Local path: LAZY localCheckpoint (r17) — the cut is the
-        # LogicalRDD plan truncation plus persist-once semantics, both
-        # of which hold with eager=False; round 1's fingerprint action
-        # materializes it, saving one standalone job per CC call. The
-        # reliable path stays eager: RDD.checkpoint() recomputes the
-        # lineage when materialized lazily by a consuming job.
-        edges = (
-            edges.checkpoint(eager=True)
-            if reliable
-            else edges.localCheckpoint(eager=False)
-        )
+        # lineage_cut's local checkpoint is lazy: round 1's fingerprint
+        # action materializes it, saving one standalone job per CC call.
+        edges = lineage_cut(edges)
     fast = _local_cc_fastpath(edges)
     if fast is not None:
         return fast
@@ -179,7 +148,10 @@ def connected_components(
         .withColumn("comp", F.col("node"))
     )
     prev_fp = None
-    for _ in range(max_iter):
+    # Fingerprint equality trails the fixpoint by one round (the round
+    # that REACHES it still changes the labels), so one verify round
+    # past max_iter lets a graph converging exactly at max_iter return.
+    for _ in range(max_iter + 1):
         # candidate label for each node: min over (own, neighbors')
         neigh = (
             edges.join(labels, edges.v == labels.node)
@@ -202,11 +174,7 @@ def connected_components(
         new_labels = new_labels.join(jump, "comp", "left").select(
             "node", F.coalesce("comp2", "comp").alias("comp")
         )
-        new_labels = (
-            new_labels.checkpoint(eager=True)
-            if reliable
-            else new_labels.localCheckpoint(eager=False)
-        )
+        new_labels = lineage_cut(new_labels)
         # Convergence = labels identical to last round. Min-label
         # propagation is monotone (labels only decrease), so a 64-bit
         # XOR fingerprint being unchanged means fixpoint (bit_xor is
@@ -221,9 +189,14 @@ def connected_components(
         ).collect()[0][0]
         labels = new_labels
         if fp == prev_fp:
-            break
+            return labels.select("node", "comp")
         prev_fp = fp
-    return labels.select("node", "comp")
+    # Exhaustion: the labels may still name wrong components, so fail
+    # loudly rather than return them.
+    raise RuntimeError(
+        f"connected_components did not converge within max_iter={max_iter} "
+        "rounds (label fingerprint still moving); raise max_iter"
+    )
 
 
 def dedup_clusters(
@@ -237,8 +210,6 @@ def dedup_clusters(
     every id mapped to its cluster keeper (min id; singletons keep
     themselves). Returns (id, keeper_id, cluster_size).
     """
-    from utility_service_areas_spark.operators.dedup import lineage_cut
-
     # The id frame is the file-backed corpus side, so it carries the
     # size signal the (often cached) pair frame hides (r17).
     comp = connected_components(
@@ -296,18 +267,13 @@ def pagerank_micros(
     Returns (node, rank_micros) for every node appearing in edges.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-
     # Materialize the loop-invariant frames ONCE: the edge list with
     # its out-degree fused in (saves a per-round join), and the node
     # frame (otherwise its distinct-shuffle re-runs every round).
-    e = _cut(
+    e = lineage_cut(
         e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src")
     )
-    nodes = _cut(
+    nodes = lineage_cut(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -340,7 +306,7 @@ def pagerank_micros(
         # doesn't need the per-round materialization CC's unbounded
         # loop does — each eager checkpoint costs a full job.
         if i % 2 == 1 or i == n_iter - 1:
-            ranks = _cut(ranks)
+            ranks = lineage_cut(ranks)
     return ranks
 
 
@@ -381,17 +347,9 @@ def triangle_counts(
     # (minhash, banding, bucket join) re-runs per branch. Both frames
     # are edge-sized, tiny next to the doc corpus they derive from.
     # Measured at 10× interleaved A/B (warm rounds): 17.3-18.5 s →
-    # 4.1 s (4.2×). Reliable checkpoint when a dir is configured
-    # (cluster posture), localCheckpoint otherwise — the same
-    # discipline as connected_components above.
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-
-    und = _cut(und)
-    tri = _oriented_triangles(und, _cut)
+    # 4.1 s (4.2×).
+    und = lineage_cut(und)
+    tri = _oriented_triangles(und)
     corners = (
         tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
@@ -400,7 +358,7 @@ def triangle_counts(
     return corners
 
 
-def _oriented_triangles(und: DataFrame, _cut, deg: DataFrame | None = None) -> DataFrame:
+def _oriented_triangles(und: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     """(x, y, z) rows, one per triangle, from an already-materialized
     both-directions edge list — the shared kernel of per-node
     `triangle_counts` and per-cluster `cluster_density`. ``deg`` is
@@ -416,7 +374,7 @@ def _oriented_triangles(und: DataFrame, _cut, deg: DataFrame | None = None) -> D
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = _cut(with_deg.filter(lower_first).select("u", "v"))
+    oriented = lineage_cut(with_deg.filter(lower_first).select("u", "v"))
     e1 = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
@@ -451,12 +409,6 @@ def cluster_density(
     component's min node id (the CC label), n_docs >= 2 always —
     isolated docs have no edges and no cluster.
     """
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-
     sym = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .union(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
@@ -470,24 +422,24 @@ def cluster_density(
     # edge list EVERY round (measured 23.5 → 27.5 s at 30× when the
     # repartition was dropped).
     try:
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_shuffle = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         n_shuffle = None
     if n_shuffle:
         # Same source-size width bound as connected_components (r17).
         w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
         sym = sym.repartition(w, "v")
-    und = _cut(sym)
+    und = lineage_cut(sym)
     # Degree frame computed ONCE (node-sized, cut) and shared by the
     # orientation and the per-cluster stats; `und` is already
     # symmetric+distinct+partitioned+materialized, so CC adds no
     # edge-frame pass of its own (pre_materialized=True).
-    deg = _cut(
+    deg = lineage_cut(
         und.groupBy("u").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed(
             "u", "node"
         )
     )
-    tri = _oriented_triangles(und, _cut, deg)
+    tri = _oriented_triangles(und, deg)
     comp = connected_components(und, "u", "v", pre_materialized=True)
     per_node = comp.join(deg, "node")
     base = per_node.groupBy("comp").agg(
@@ -518,133 +470,6 @@ def cluster_density(
             dens.alias("edge_density_micros"),
             trans.alias("transitivity_micros"),
         )
-    )
-
-
-def connected_components_twostar(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, 'Connected Components in MapReduce and
-    Beyond') — the hub-safe alternative to min-label propagation
-    (``connected_components``): label propagation's per-round work is
-    O(edges) for O(log d) rounds after pointer-jumping, but every
-    round re-joins the FULL edge list; two-star provably SHRINKS the
-    edge multiset toward stars in O(log^2 n) rounds, and on the
-    high-degree near-clique graphs dedup produces, large-star
-    collapses a clique to a star in ONE round — the remaining rounds
-    join star-sized (node-sized) frames, not clique-edge-sized ones.
-
-    Semantics are identical by construction — at the fixpoint every
-    node is adjacent to its component minimum — and pinned
-    label-identical to ``connected_components`` on chains, cliques,
-    stars, and the substrate's LSH pair graph
-    (tests/test_r13_operators.py).
-
-    Each round: two groupBy-min aggregations + two node-keyed joins
-    (all partial-agged, no global structure), localCheckpoint per
-    round for the lineage cut, bit_xor(xxhash64) fingerprint for the
-    fixpoint test (order-independent, one tiny scan).
-
-    Returns (node, comp) for every node appearing in pairs.
-    """
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-        )
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return (
-            e.filter(F.col("u") != F.col("v"))
-            .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _center_mins(e: DataFrame) -> DataFrame:
-        return e.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-
-    edges = _cut(
-        _sym(pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")))
-    )
-    # Same size-bounded driver fast path as connected_components —
-    # two-star's labels are pinned identical to min-label propagation,
-    # so the union-find answer is identical to both.
-    fast = _local_cc_fastpath(edges)
-    if fast is not None:
-        return fast
-
-    def _star_round(e: DataFrame) -> DataFrame:
-        # LARGE-STAR: every neighbor LARGER than the center re-attaches
-        # to the center's minimum (min over neighborhood + self).
-        mins = _center_mins(e)
-        large = (
-            e.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = _cut(_sym(large))
-        # SMALL-STAR: every neighbor <= the center, plus the center
-        # itself, re-attaches to the center's minimum.
-        mins = _center_mins(e)
-        small = (
-            e.join(mins, "u")
-            .filter(F.col("v") <= F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        )
-        return _cut(_sym(small))
-
-    def _fingerprint(e: DataFrame) -> int:
-        return e.agg(
-            F.expr("bit_xor(xxhash64(u, v))").alias("fp")
-        ).collect()[0][0]
-
-    prev_fp = None
-    converged = False
-    for _ in range(max_iter):
-        edges = _star_round(edges)
-        fp = _fingerprint(edges)
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    if not converged:
-        # Fingerprint equality trails the fixpoint by one round (the
-        # round that REACHES it still changes the set), so a graph that
-        # converges exactly at max_iter would look unconverged. Verify
-        # directly with one extra round before raising — its cost is
-        # one round we were about to charge to an exception anyway
-        # (ADVICE r14 #3).
-        edges = _star_round(edges)
-        converged = _fingerprint(edges) == prev_fp
-    if not converged:
-        # ADVICE r13 #4: exiting by exhaustion means the edge set never
-        # reached the star fixpoint — the labels below could be WRONG
-        # components. This operator is sold as the trillion-edge path
-        # where hitting the cap is likelier, so an unconverged result
-        # must never be mistakable for a fixpoint: fail loudly and tell
-        # the caller the lever.
-        raise RuntimeError(
-            f"connected_components_twostar did not converge within "
-            f"max_iter={max_iter} rounds (edge-set fingerprint still "
-            "moving) — labels would be unreliable; raise max_iter "
-            "(rounds needed grow O(log^2 n))"
-        )
-    # Fixpoint = disjoint stars centered at component minima: each
-    # node's label is min(self, min neighbor).
-    return (
-        edges.groupBy("u")
-        .agg(F.least(F.min("v"), F.first("u")).alias("comp"))
-        .select(F.col("u").alias("node"), "comp")
     )
 
 
@@ -680,14 +505,7 @@ def hits_micros(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-        )
-
-    e = _cut(e)
+    e = lineage_cut(e)
     hubs = (
         e.select("src").distinct().withColumn("h", F.lit(1_000_000).cast("long"))
     )
@@ -711,8 +529,8 @@ def hits_micros(
             "src", F.expr("(h_raw * 1000000) div mx").alias("h")
         )
         if i % 2 == 1 or i == n_iter - 1:
-            hubs = _cut(hubs)
-            auths = _cut(auths)
+            hubs = lineage_cut(hubs)
+            auths = lineage_cut(auths)
     return hubs.select(
         F.col("src").alias("node"), F.lit("hub").alias("side"),
         F.col("h").alias("score_micros"),

@@ -141,4 +141,9 @@ def cpu_spread(
             thresh = 10 * 1024 * 1024
         if thresh > 0 and nbytes is not None and nbytes < thresh:
             return df
+    # Kept even at width 1 over a 1-partition scan: downstream keyed
+    # aggregates and joins reuse its hash partitioning on ``key``.
+    # Skipping it measured 52 -> 61 jobs, 91 -> 124 stages and 2.1x
+    # shuffle bytes over the 7 llm_curation benchmark queries
+    # (local[4], 4-core VM).
     return df.repartition(_width_from_bytes(nbytes, target, bytes_per_task), key)

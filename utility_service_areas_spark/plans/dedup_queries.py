@@ -152,9 +152,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidate_pairs(sig, n_hashes=8, band_size=2)
 
 
-# Shared by #50 (min-label propagation CC) and #243 (two-star CC):
-# the two algorithms are pinned label-identical, so ONE oracle attests
-# both — same pairs, same keeper/size semantics.
+# The dedup endgame's reference: recursive reachability over the
+# scored LSH pairs, component = min reachable id, every doc mapped to
+# its keeper with the cluster size.
 _CLUSTERS_ORACLE = f"""
     WITH RECURSIVE {_SHINGLES_CTE},
     {_minhash_sig_sql()},
@@ -1231,49 +1231,4 @@ def minhash_bbit_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.sum("err_micros") * 1.0 / F.count(F.lit(1)) + 0.5)
         .cast("long")
         .alias("mean_abs_err_micros"),
-    )
-
-
-@query(
-    "dedup_cc_twostar",
-    oracle=_CLUSTERS_ORACLE,
-    doc="The dedup endgame computed by ALTERNATING LARGE-STAR / "
-    "SMALL-STAR connected components (Kiveris et al. 2014) instead of "
-    "#50's min-label propagation — same pairs, same keeper/size "
-    "output, SAME oracle (the two algorithms are additionally pinned "
-    "label-identical on chain/clique/star/substrate graphs in "
-    "tests/test_r13_operators.py). Why a second CC: label propagation "
-    "re-joins the FULL edge list every round; two-star provably "
-    "shrinks the edge multiset toward stars (O(log^2 n) rounds, and "
-    "near-clique dedup components collapse to a star in ONE "
-    "large-star round), so later rounds join node-sized frames — the "
-    "algorithm of record for trillion-edge CC. Per round: two "
-    "groupBy-min aggs + two node-keyed joins, localCheckpoint lineage "
-    "cut, order-independent xxhash64 fingerprint as the fixpoint test.",
-    tags=("dedup", "graph"),
-)
-def dedup_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from utility_service_areas_spark.operators.dedup import lineage_cut
-    from utility_service_areas_spark.operators.graph import (
-        connected_components_twostar,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signatures(docs, "doc_id", "text", k=3, n_hashes=8)
-    pairs = lsh_candidate_pairs(sig, n_hashes=8, band_size=2).filter(
-        "n_matching_minhashes >= 6"
-    )
-    comp = connected_components_twostar(pairs)
-    joined = docs.select(F.col("doc_id").alias("node")).join(comp, "node", "left")
-    resolved = lineage_cut(
-        joined.select(
-            F.col("node").alias("doc_id"),
-            F.coalesce(F.col("comp"), F.col("node")).alias("keeper_id"),
-        )
-    )
-    sizes = resolved.groupBy("keeper_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return resolved.join(sizes, "keeper_id").select(
-        "doc_id", "keeper_id", "cluster_size"
     )

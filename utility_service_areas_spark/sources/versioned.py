@@ -50,8 +50,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from utility_service_areas_spark.operators.localrel import local_df
 
-_MANIFEST_RE = "_v{n}.json"
-
 
 def _manifest_name(n: int) -> str:
     return f"_v{n}.json"
