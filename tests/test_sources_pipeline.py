@@ -22,10 +22,11 @@ from utility_service_areas_spark.functions.geometry import polygon_area
 from utility_service_areas_spark.plans.service_areas import (
     build_raw_service_areas,
     build_service_areas,
+    replay_service_areas_from_raw,
 )
 from utility_service_areas_spark.sources.geojson import read_geojson, write_geojson
 from utility_service_areas_spark.sources.html_table import read_html_tables
-from utility_service_areas_spark.sources.kml import read_kml
+from utility_service_areas_spark.sources.kml import parse_kml_bytes, read_kml
 
 KML_TMPL = """<?xml version="1.0" encoding="UTF-8"?>
 <kml xmlns="http://www.opengis.net/kml/2.2"><Document>{placemarks}</Document></kml>
@@ -197,6 +198,124 @@ def test_cleaned_patched_pipeline(spark, kml_dir, certificates, chronology):
     assert areas == [4.0, 36.0]  # 61's 2x2 and the patch 6x6; original 1x1 gone
     # KML (2001) older than last order (2002) → outdated
     assert r169.geometry_cert_sync_status == "outdated"
+
+
+def test_each_layer_scans_and_repairs_kml_once(spark, kml_dir, certificates, chronology):
+    """One KML parse (MapInPandas) and one st_make_valid
+    (ArrowEvalPython) per layer: a self-join over the KML frame would
+    repeat both in the physical plan."""
+    glob = kml_dir + "/*.kml"
+    layers = {
+        "cleaned": build_service_areas(
+            spark, glob, certificates, chronology, [520], [59], [(169, 61)]
+        ),
+        "raw": build_raw_service_areas(spark, glob, certificates),
+    }
+    for name, df in layers.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = (plan.count("MapInPandas"), plan.count("ArrowEvalPython"))
+        assert got == (1, 1), f"{name}: {got}\n{plan}"
+
+
+# merge_patches -> {certificate: (n_source_polygons, [(min x, min y) of
+# each polygon's outer ring, in output order])}. Fixture polygons:
+# 8 (0,0) (10,0); 169 original (0,0), -plss-fix patch (20,20); 61
+# (40,40). Own polygons come first, then absorbed ones by ascending
+# cert2. The raw layer (the replay's input) has 169's original.
+OWN = {8: (2, [(0, 0), (10, 0)]), 61: (1, [(40, 40)]), 169: (1, [(20, 20)])}
+MERGE_PINS = {
+    "none": ([], OWN, None),
+    "single": ([(169, 61)], {8: OWN[8], 169: (1, [(20, 20), (40, 40)])}, None),
+    "chain": ([(8, 169), (169, 61)], {8: (2, [(0, 0), (10, 0), (20, 20)])}, None),
+    "absorbs_two": (
+        [(8, 169), (8, 61)],
+        {8: (2, [(0, 0), (10, 0), (40, 40), (20, 20)])},
+        None,
+    ),
+    "two_absorbers": (
+        [(8, 61), (169, 61)],
+        {8: (2, [(0, 0), (10, 0), (40, 40)]), 169: (1, [(20, 20), (40, 40)])},
+        None,
+    ),
+    # the dissolve (assume_disjoint=False) unions the doubled polygon away
+    "duplicate": (
+        [(169, 61), (169, 61)],
+        {8: OWN[8], 169: (1, [(20, 20), (40, 40), (40, 40)])},
+        {8: OWN[8], 169: (1, [(20, 20), (40, 40)])},
+    ),
+    "missing_absorber": ([(7, 61)], {8: OWN[8], 169: OWN[169]}, None),
+    "self_merge": ([(8, 8)], {61: OWN[61], 169: OWN[169]}, None),
+}
+
+
+def _layout(df) -> dict:
+    return {
+        int(r.certificate_number): (
+            r.n_source_polygons,
+            [(min(x for x, _ in p[0]), min(y for _, y in p[0])) for p in r.geometry],
+        )
+        for r in df.collect()
+    }
+
+
+@pytest.mark.parametrize("case", sorted(MERGE_PINS))
+def test_merge_and_patch_preference_pins(
+    spark, kml_dir, certificates, chronology, case
+):
+    """Certificates, n_source_polygons and polygon order of the
+    cleaned layer (concat and dissolve) and of the replay over the raw
+    layer, for each acquisition-merge shape."""
+    merges, want, dissolved = MERGE_PINS[case]
+    glob = kml_dir + "/*.kml"
+
+    def cleaned(assume_disjoint):
+        return _layout(
+            build_service_areas(
+                spark, glob, certificates, chronology, [520], [59], merges,
+                assume_disjoint=assume_disjoint,
+            )
+        )
+
+    assert cleaned(True) == want
+    assert cleaned(False) == (dissolved or want)
+    raw = build_raw_service_areas(spark, glob, certificates).select(
+        "certificate_number", "geometry", "n_source_polygons"
+    )
+    replayed = _layout(
+        replay_service_areas_from_raw(raw, certificates, [520], [59], merges)
+    )
+    # the replay reads the raw layer, where 169 is its original (0,0)
+    assert replayed == {
+        c: (n, [(0, 0) if xy == (20, 20) else xy for xy in polys])
+        for c, (n, polys) in want.items()
+    }
+
+
+def test_read_kml_reads_only_the_globbed_directory_level(spark, tmp_path):
+    """A stray non-KML file and a nested KML copy are not read: the
+    rows are exactly those of the top-level *.kml files."""
+    import os
+    import shutil
+
+    from perfbench.gen import generate_service_areas
+
+    generate_service_areas(1, str(tmp_path))
+    d = tmp_path / "kml"
+    top = sorted(d.glob("*.kml"))
+    (d / "old").mkdir()
+    shutil.copy(top[0], d / "old" / "x.kml")
+    (d / "notes.txt").write_text("not a KML")
+    want = sorted(
+        (f.name, r["placemark_name"], len(r["geometry"]))
+        for f in top
+        for r in parse_kml_bytes(str(f), f.read_bytes())
+    )
+    got = sorted(
+        (os.path.basename(r.path), r.placemark_name, len(r.geometry))
+        for r in read_kml(spark, str(d / "*.kml")).collect()
+    )
+    assert len(got) == 55
+    assert got == want
 
 
 def test_geojson_round_trip(spark, kml_dir, certificates, chronology, tmp_path):

@@ -127,6 +127,42 @@ def test_unchanged_rerun_is_noop_and_edit_rebuilds_cone(
     assert r4["certificates"] == "skipped"
 
 
+def test_manifest_rows_match_stage_outputs(spark, pipeline_inputs):
+    """A built stage's manifest ``rows`` is its output's row count; a
+    skipped stage keeps the count recorded when it was built."""
+    import json
+
+    from utility_service_areas_spark.plans.targets import MANIFEST_NAME, run_pipeline
+
+    kml, certs, chron, store = pipeline_inputs
+
+    def recorded():
+        with open(os.path.join(store, MANIFEST_NAME)) as f:
+            return {s: m["rows"] for s, m in json.load(f).items()}
+
+    def counted():
+        return {
+            s: spark.read.parquet(os.path.join(store, s)).count()
+            for s in recorded()
+        }
+
+    run_pipeline(spark, _stages(kml, certs, chron), store)
+    first = recorded()
+    assert first == counted()
+    assert first == {
+        "certificates": 6,
+        "chronology": 5,
+        "raw_service_areas": 2,
+        "service_areas": 2,
+    }
+
+    with open(chron, "a") as f:
+        f.write("8,U-23-1,2,5/5/2023,Service Area Change,\n")
+    report = run_pipeline(spark, _stages(kml, certs, chron), store)
+    assert report["certificates"] == report["raw_service_areas"] == "skipped"
+    assert recorded() == counted() == {**first, "chronology": 6}
+
+
 def test_force_rebuilds_everything(spark, pipeline_inputs):
     from utility_service_areas_spark.plans.targets import run_pipeline
 

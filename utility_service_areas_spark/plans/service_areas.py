@@ -10,12 +10,14 @@ Parity map (reference → here):
 Everything is declarative DataFrame ops; the only UDF on the path is
 st_make_valid (geometry repair). Dim-sized inputs (certificates,
 patches) are broadcast; the KML fact side is never shuffled except
-for the single group-by-certificate combine.
+for the single group-by-certificate combine, and, when there are
+acquisition merges, the merge's re-key shuffle over the combined
+per-certificate rows. Each layer scans and repairs the KML set once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from utility_service_areas_spark.functions.geometry import st_make_valid, st_union_multi
@@ -31,40 +33,33 @@ from utility_service_areas_spark.operators.localrel import local_df
 CERT_NUM_RE = r"(\d+(\.\d+)?)"  # matches CPCN '18.1' too (R/functions.R:180)
 
 
-def _kml_with_cert(kml: DataFrame) -> DataFrame:
-    """Extract certificate number; prefer patch files over originals
-    per certificate (R/functions.R:450-458: if a -plss-fix KML exists,
-    the original is dropped)."""
-    basename = F.element_at(F.split(F.col("path"), "/"), -1)
-    df = kml.withColumn(
-        "certificate_number",
-        F.nullif(
-            F.regexp_extract(
-                F.coalesce(F.nullif(F.col("placemark_name"), F.lit("")), basename),
-                CERT_NUM_RE,
-                1,
-            ),
-            F.lit(""),
-        ).cast("double"),
-    ).withColumn("is_patch", F.col("path").contains("-plss-fix"))
-    has_patch = df.groupBy("certificate_number").agg(
-        F.max(F.col("is_patch").cast("int")).alias("any_patch")
-    )
+def _combine_by_certificate(kml: DataFrame, name: Column) -> DataFrame:
+    """st_make_valid + group-by-cert st_combine (R/functions.R:466-471)
+    on the certificate number read from ``name``; rows without one are
+    dropped. One shuffle on certificate_number. ``parts`` holds each
+    polygon and whether it came from a -plss-fix KML."""
+    cert = F.nullif(F.regexp_extract(name, CERT_NUM_RE, 1), F.lit("")).cast("double")
     return (
-        df.join(F.broadcast(has_patch), "certificate_number")
-        .filter(F.col("is_patch") | (F.col("any_patch") == 0))
-        .drop("any_patch")
+        kml.withColumn("certificate_number", cert)
+        .filter(F.col("certificate_number").isNotNull())
+        .withColumn("geometry", st_make_valid(F.col("geometry")))
+        .groupBy("certificate_number")
+        .agg(
+            F.collect_list(
+                F.struct(
+                    F.col("path").contains("-plss-fix").alias("is_patch"), "geometry"
+                )
+            ).alias("parts")
+        )
     )
 
 
-def combine_by_certificate(kml: DataFrame) -> DataFrame:
-    """st_make_valid + group-by-cert st_combine → MultiPolygon
-    (R/functions.R:466-471). One shuffle on certificate_number."""
-    valid = kml.withColumn("geometry", st_make_valid(F.col("geometry")))
-    return valid.groupBy("certificate_number").agg(
-        F.collect_list("geometry").alias("geometry"),
-        F.count(F.lit(1)).alias("n_source_polygons"),
-    )
+def _multipolygon(parts: Column) -> list[Column]:
+    """geometry and n_source_polygons of the polygons in ``parts``."""
+    return [
+        F.transform(parts, lambda p: p["geometry"]).alias("geometry"),
+        F.size(parts).cast("long").alias("n_source_polygons"),
+    ]
 
 
 def build_raw_service_areas(
@@ -72,13 +67,9 @@ def build_raw_service_areas(
 ) -> DataFrame:
     """Raw merged layer: every KML, no filtering/patching
     (R/functions.R:173-192)."""
-    kml = read_kml(spark, kml_glob).withColumn(
-        "certificate_number",
-        F.nullif(
-            F.regexp_extract(F.col("placemark_name"), CERT_NUM_RE, 1), F.lit("")
-        ).cast("double"),
-    )
-    combined = combine_by_certificate(kml.filter(F.col("certificate_number").isNotNull()))
+    combined = _combine_by_certificate(
+        read_kml(spark, kml_glob), F.col("placemark_name")
+    ).select("certificate_number", *_multipolygon(F.col("parts")))
     return combined.join(F.broadcast(certificates), "certificate_number", "inner")
 
 
@@ -146,48 +137,38 @@ def _merge_acquisitions(
     cert2's polygons are appended into cert1's MultiPolygon (disjoint
     service areas: union == combine). Absorbed certs never survive as
     their own rows, even where the certificate filter would keep them
-    (r15 review #5; on the real data every cert2 is Inactive anyway)."""
+    (r15 review #5; on the real data every cert2 is Inactive anyway).
+    Each cert2 row is re-keyed to its cert1 as an acquired part and one
+    group-by collects the parts; a group needs exactly one own part.
+    Parts are sorted (collect_list order is task-completion order, r15
+    review #4): own polygons first, then absorbed ones by cert2."""
     if not merge_patches:
         return combined
-    patch_df = local_df(combined.sparkSession, merge_patches, ["cert1", "cert2"])
-    # collect_list order is task-completion order — sort by cert2
-    # before flattening so a cert absorbing several others gets a
-    # run-stable polygon order (r15 review #4)
-    acquired = (
-        combined.join(
-            F.broadcast(patch_df),
-            combined.certificate_number == patch_df.cert2,
-        )
-        .groupBy(F.col("cert1").alias("certificate_number"))
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("cert2").alias("c2"),
-                                F.col("geometry").alias("g"),
-                            )
-                        )
-                    ),
-                    lambda s: s["g"],
-                )
-            ).alias("acq_geometry")
+    patches = F.broadcast(
+        local_df(combined.sparkSession, merge_patches, ["cert1", "cert2"])
+    )
+    owner = F.coalesce(F.col("cert1").cast("double"), "certificate_number")
+    parts = F.array_sort(
+        F.collect_list(
+            F.struct(
+                F.col("cert1").isNotNull().alias("acquired"),
+                "cert2",
+                "geometry",
+                "n_source_polygons",
+            )
         )
     )
-    merged = (
-        combined.join(F.broadcast(acquired), "certificate_number", "left")
-        .withColumn(
-            "geometry",
-            F.when(
-                F.col("acq_geometry").isNotNull(),
-                F.concat(F.col("geometry"), F.col("acq_geometry")),
-            ).otherwise(F.col("geometry")),
+    return (
+        combined.join(patches, combined.certificate_number == patches.cert2, "left")
+        .groupBy(owner.alias("certificate_number"))
+        .agg(parts.alias("parts"))
+        .filter(F.size(F.filter("parts", lambda p: ~p["acquired"])) == 1)
+        .select(
+            "certificate_number",
+            F.flatten(F.transform("parts", lambda p: p["geometry"])).alias("geometry"),
+            F.col("parts")[0]["n_source_polygons"].alias("n_source_polygons"),
         )
-        .drop("acq_geometry")
     )
-    absorbed = [c2 for _, c2 in merge_patches]
-    return merged.filter(~F.col("certificate_number").isin(absorbed))
 
 
 def build_service_areas(
@@ -213,9 +194,18 @@ def build_service_areas(
     acquisitions don't double-count area.
     """
     certs = _active_certificates(certificates, operator_ids, inactive_ids)
+    basename = F.element_at(F.split(F.col("path"), "/"), -1)
+    combined = _combine_by_certificate(
+        read_kml(spark, kml_glob),
+        F.coalesce(F.nullif(F.col("placemark_name"), F.lit("")), basename),
+    )
+    # if a -plss-fix KML exists, the original is dropped (R/functions.R:450-458)
+    patched = F.filter(
+        "parts",
+        lambda p: p["is_patch"] | ~F.array_contains(F.col("parts")["is_patch"], True),
+    )
     combined = _merge_acquisitions(
-        combine_by_certificate(_kml_with_cert(read_kml(spark, kml_glob))),
-        merge_patches,
+        combined.select("certificate_number", *_multipolygon(patched)), merge_patches
     )
     if merge_patches and not assume_disjoint:
         # True dissolve of the merged MultiPolygon — only the

@@ -38,7 +38,8 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_MANIFEST.json"
 
@@ -186,7 +187,9 @@ def run_pipeline(
 ) -> dict[str, str]:
     """Run the DAG against ``store``, memoized. Returns
     {stage name -> 'built' | 'skipped'}. ``incremental=False`` forces
-    a full rebuild (still writing a fresh manifest)."""
+    a full rebuild (still writing a fresh manifest). A built stage's
+    manifest ``rows`` is observed on its parquet write, not re-read;
+    a skipped stage keeps the ``rows`` recorded when it was built."""
     os.makedirs(store, exist_ok=True)
     mpath = os.path.join(store, MANIFEST_NAME)
     manifest: dict[str, dict] = {}
@@ -237,13 +240,10 @@ def run_pipeline(
         dep_frames = {
             d: spark.read.parquet(outputs[d]) for d in s.deps
         }
-        df = s.build(spark, dep_frames)
+        rows = Observation()
+        df = s.build(spark, dep_frames).observe(rows, F.count(F.lit(1)).alias("n"))
         df.write.mode("overwrite").parquet(out_path)
-        manifest[s.name] = {
-            "key": key,
-            "output": out_path,
-            "rows": spark.read.parquet(out_path).count(),
-        }
+        manifest[s.name] = {"key": key, "output": out_path, "rows": rows.get["n"]}
         report[s.name] = "built"
 
     with open(mpath, "w") as f:
@@ -287,7 +287,6 @@ def service_areas_stages(
     """The _targets.R DAG: certificates_csv -> chronology ->
     raw layer -> cleaned/patched layer, each stage memoized on its
     input content + upstream keys + config."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField, StructType
 
     from utility_service_areas_spark.plans.service_areas import (

@@ -11,6 +11,7 @@ Only stdlib xml.etree is used (no lxml in the environment).
 
 from __future__ import annotations
 
+import os
 import re
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
@@ -132,8 +133,13 @@ def parse_kml_bytes(path: str, blob: bytes) -> list[dict]:
 
 
 def read_kml(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed KML read: (path, placemark_name, description, geometry)."""
-    binary = spark.read.format("binaryFile").load(path_glob)
+    """Distributed KML read: (path, placemark_name, description, geometry).
+    Lists the glob's directory once and keeps the file names matching its
+    basename; subdirectories are not read. (Loading the glob itself lists
+    each match as a root path: past 32 files, a Spark job per read.)"""
+    directory, pattern = os.path.split(path_glob)
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", pattern)
+    binary = reader.load(directory)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
